@@ -33,8 +33,6 @@ import json
 import os
 import time as _time
 
-import numpy as np
-
 from pyspark.sql import SparkSession
 
 
@@ -237,12 +235,7 @@ def run_experiment(spark: SparkSession, args: argparse.Namespace) -> dict:
         write_model_artifact,
         write_parquet,
     )
-    from multiomix_aws_emr_spark.sources.survival import (
-        clean_wide,
-        long_to_wide,
-        read_clinical_tsv,
-        read_molecules_tsv,
-    )
+    from multiomix_aws_emr_spark.sources.survival import read_survival_matrix
 
     t0 = _time.perf_counter()
     # Empty-subset / error sentinel for the metaheuristic: -1.0 for every
@@ -303,17 +296,13 @@ def run_experiment(spark: SparkSession, args: argparse.Namespace) -> dict:
 
             worst_fitness = NEG_INF_FITNESS
 
-    molecules = read_molecules_tsv(spark, args.molecules_dataset)
-    wide = clean_wide(long_to_wide(molecules))
-    clinical = read_clinical_tsv(spark, args.clinical_dataset)
-
-    # The cleaned molecules matrix joins clinical on sample_id, then lands
-    # on the driver as the bounded pandas frame the metaheuristic needs
-    # (the reference broadcasts exactly this object, core.py:167-169).
-    joined = wide.join(clinical, "sample_id", "inner")
-    pdf = joined.toPandas().set_index("sample_id").sort_index()
-    time_col = pdf.pop("time").to_numpy(dtype=np.float64)
-    event_col = pdf.pop("event").to_numpy(dtype=bool)
+    # The cleaned molecules matrix is the bounded pandas frame the
+    # metaheuristic broadcasts (the reference broadcasts exactly this
+    # object, core.py:167-169), so each TSV is collected once and the
+    # pivot, clean and clinical join run on the driver.
+    pdf, time_col, event_col = read_survival_matrix(
+        spark, args.molecules_dataset, args.clinical_dataset
+    )
 
     if getattr(args, "algorithm", "bbha") == "blind_search":
         from multiomix_aws_emr_spark.fs.blind import run_blind_search

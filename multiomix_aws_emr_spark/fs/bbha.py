@@ -5,9 +5,13 @@ Re-founds the reference's core compute job
 
 - star population: a small driver-side list of (star_id, mask) pairs (D3);
   the reference's `sc.parallelize` + pinned `partitionBy` + `mapPartitions`
-  (`metaheuristics.py:248,297-299`, R7/R8/R9) becomes
-  ``createDataFrame`` + a planned ``bin_id`` column +
-  ``groupBy('bin_id').applyInPandas`` (Arrow-vectorized, SURVEY.md §4.2);
+  (`metaheuristics.py:248,297-299`, R7/R8/R9) becomes one
+  ``spark.range(0, n_bins, 1, n_bins).mapInPandas`` job per round
+  (:func:`evaluate_round`): partition b IS bin b, so every bin is its own
+  task with no exchange for AQE to coalesce, and the planned bins (the
+  load balancer's output) reach the executors unchanged;
+- the all-features baseline (R34) rides in iteration 0's round as star
+  -1, so a run is exactly one Spark job per iteration;
 - the molecules matrix ships once per executor via ``sc.broadcast``
   (`scripts/core.py:167-169`, R12/P1 — unchanged, it is the right tool);
 - per-iteration driver loop: arg-best black-hole selection with the
@@ -15,8 +19,8 @@ Re-founds the reference's core compute job
   Euclidean event-horizon test (`:683-694`, R16), the tanh position update
   (`:696-705`, R17), seeded random re-initialization (`:307-327`, R18);
 - the bounded ``collect`` of n_stars fitness rows per iteration matches
-  the reference's synchronous loop (`:300`, R11/P7) — the only driver
-  materialization in the engine, O(n_stars), independent of data size;
+  the reference's synchronous loop (`:300`, R11/P7) — O(n_stars),
+  independent of data size;
 - per-host runtime accounting (`:617-645,707-714`, R19/R20) is re-emitted
   as a tidy metrics DataFrame instead of a dict of parallel lists (D6).
 
@@ -49,6 +53,7 @@ from __future__ import annotations
 import json
 import socket
 import time as _time
+from collections.abc import Mapping, Sequence
 from dataclasses import dataclass, field
 from typing import Callable, Optional
 
@@ -89,7 +94,7 @@ class BBHAResult:
     execution_time: float
     history: list[dict] = field(default_factory=list)
     #: R34 (`scripts/core.py:171-179`): CV fitness of the all-features
-    #: mask, evaluated once before the search as the comparison baseline.
+    #: mask, evaluated once (in the first round) as the comparison baseline.
     baseline_fitness: Optional[float] = None
 
     def history_df(self, spark: SparkSession) -> DataFrame:
@@ -146,15 +151,22 @@ class _ClosureValue:
         self.value = value
 
 
-def _payload_handle(sc, payload: dict, use_broadcast: bool):
-    """The evaluator's data handle: a real Broadcast, or the closure
-    wrapper when broadcast is disabled."""
+def _payload_handle(sc, x: pd.DataFrame, time_col, event_col, use_broadcast: bool):
+    """The evaluator's data handle over the samples x features matrix and
+    its survival columns: a real Broadcast, or the closure wrapper when
+    broadcast is disabled."""
+    payload = {
+        "values": x.to_numpy(dtype=np.float64),
+        "sample_ids": x.index.to_numpy(),
+        "time": np.asarray(time_col, dtype=np.float64),
+        "event": np.asarray(event_col, dtype=bool),
+    }
     return sc.broadcast(payload) if use_broadcast else _ClosureValue(payload)
 
 
 def _make_evaluator(bc, fitness_fn: FitnessFn, worst_fitness: float = WORST_FITNESS):
-    """Grouped-map evaluator: one Arrow batch per bin, one fitness call per
-    star in the bin (the reference's mapPartitions body,
+    """Bin evaluator: one fitness call per (star_id, mask) row of a bin's
+    frame (the reference's mapPartitions body,
     `metaheuristics.py:214-222` + zero-feature guard `core.py:52-77`).
 
     ``worst_fitness`` is the zero-feature sentinel; callers whose fitness
@@ -199,29 +211,72 @@ _EVAL_SCHEMA = (
     "star_id int, fitness double, n_features int, exec_time double, hostname string"
 )
 
+#: Reserved star id of the all-features baseline (R34); its history row
+#: sits at ``iteration=-1``.
+BASELINE_STAR = -1
 
-def evaluate_all_features_baseline(
-    spark: SparkSession, evaluator, n_features: int
-) -> dict:
-    """R34 (`scripts/core.py:171-179`): evaluate ``np.ones(n_features)``
-    once before the metaheuristic, through the SAME grouped-Arrow
-    evaluator the search uses (the reference routes it through the same
-    ``compute_cross_validation``), so the baseline is measured under
-    identical CV folds, seeding, and executor placement. One 1-row Spark
-    job; returned as a history-row dict with the reserved coordinates
-    ``iteration=-1, star_id=-1``."""
-    sdf = spark.createDataFrame(
-        [(-1, 0, [1] * n_features)],
-        schema="star_id int, bin_id int, mask array<int>",
+
+def evaluate_round(
+    spark: SparkSession,
+    evaluator,
+    masks: Sequence[np.ndarray],
+    bins: Mapping[int, int],
+    n_bins: int,
+    *,
+    baseline: bool = False,
+) -> list[tuple[int, float, int, float, str]]:
+    """Evaluate star ``i`` (mask ``masks[i]``) in bin ``bins[i]``: one
+    Spark job, one stage, one task per bin.
+
+    ``spark.range(0, n_bins, 1, n_bins)`` gives partition b the single
+    row b, and ``mapInPandas`` evaluates bin b's stars in that task, so
+    the placement the bin-packer chose is the placement that runs — no
+    shuffle, nothing for AQE to coalesce into one serial task. The
+    per-bin star lists ride in the task closure (O(n_stars x
+    n_features) ints); the data matrix stays in ``evaluator``'s
+    broadcast.
+
+    ``baseline=True`` adds the all-features mask as star
+    :data:`BASELINE_STAR` (R34, `scripts/core.py:171-179`) to the bin
+    holding the fewest stars: the same evaluator, folds and seeding as
+    the search, without a job of its own. Returns one
+    (star_id, fitness, n_features, exec_time, hostname) row per star,
+    sorted by star_id (the baseline first)."""
+    plan: dict[int, list] = {b: [] for b in range(n_bins)}
+    for i, mask in enumerate(masks):
+        plan[bins[i]].append((i, [int(v) for v in mask]))
+    if baseline:
+        n_features = len(masks[0])
+        lightest = min(plan, key=lambda b: (len(plan[b]), b))
+        plan[lightest].append((BASELINE_STAR, [1] * n_features))
+
+    def run_bins(batches):
+        for batch in batches:
+            for b in batch["id"]:
+                stars = plan[int(b)]
+                if stars:
+                    yield evaluator(pd.DataFrame(stars, columns=["star_id", "mask"]))
+
+    res = (
+        spark.range(0, n_bins, 1, n_bins)
+        .mapInPandas(run_bins, _EVAL_SCHEMA)
+        .collect()  # bounded: n_stars rows (P7)
     )
-    row = sdf.groupBy("bin_id").applyInPandas(evaluator, _EVAL_SCHEMA).collect()[0]
+    return sorted(
+        (r.star_id, r.fitness, r.n_features, r.exec_time, r.hostname) for r in res
+    )
+
+
+def history_row(iteration: int, row: tuple) -> dict:
+    """One :func:`evaluate_round` row as a history dict."""
+    star_id, fitness, n_features, exec_time, hostname = row
     return {
-        "iteration": -1,
-        "star_id": -1,
-        "fitness": float(row.fitness),
-        "n_features": int(row.n_features),
-        "exec_time": float(row.exec_time),
-        "hostname": row.hostname,
+        "iteration": iteration,
+        "star_id": star_id,
+        "fitness": fitness,
+        "n_features": n_features,
+        "exec_time": exec_time,
+        "hostname": hostname,
     }
 
 
@@ -289,6 +344,8 @@ def run_bbha(
     """
     if variant not in ("classic", "improved"):
         raise ValueError("variant must be 'classic' or 'improved'")
+    if n_iterations < 1:
+        raise ValueError("n_iterations must be at least 1")
     if variant == "improved":
         if coeff_1 not in IMPROVED_COEFF_1:
             raise ValueError(f"coeff_1 must be one of {IMPROVED_COEFF_1}")
@@ -301,20 +358,8 @@ def run_bbha(
     if n_bins is None:
         n_bins = max(1, sc.defaultParallelism)  # R33 executor discovery analog
 
-    bc = _payload_handle(
-        sc,
-        {
-            "values": x.to_numpy(dtype=np.float64),
-            "sample_ids": x.index.to_numpy(),
-            "time": np.asarray(time_col, dtype=np.float64),
-            "event": np.asarray(event_col, dtype=bool),
-        },
-        use_broadcast,
-    )
+    bc = _payload_handle(sc, x, time_col, event_col, use_broadcast)
     evaluator = _make_evaluator(bc, fitness_fn, worst_fitness)
-
-    # R34: all-features baseline before the search (`core.py:171-179`).
-    baseline = evaluate_all_features_baseline(spark, evaluator, n_features)
 
     # Star initialization: star i from seed random_state * (i + 1)
     # (seed threading shape of metaheuristics.py:524-527).
@@ -326,50 +371,32 @@ def run_bbha(
 
     cost_model = RuntimeCostModel() if use_load_balancer else None
 
-    def evaluate_all(iteration: int) -> list[tuple[int, float, int, float, str]]:
-        star_ids = list(range(n_stars))
-        bins, _ = plan_star_bins(
-            masks,
-            n_bins,
-            cost_fn=cost_fn if use_load_balancer else None,
-            cost_model=cost_model,
-        )
-        rows = [(i, bins[i], [int(b) for b in masks[i]]) for i in star_ids]
-        sdf = spark.createDataFrame(
-            rows, schema="star_id int, bin_id int, mask array<int>"
-        )
-        res = (
-            sdf.groupBy("bin_id")
-            .applyInPandas(evaluator, _EVAL_SCHEMA)
-            .collect()  # bounded: n_stars rows (P7)
-        )
-        return sorted(
-            (r.star_id, r.fitness, r.n_features, r.exec_time, r.hostname)
-            for r in res
-        )
-
-    history: list[dict] = [baseline]
+    history: list[dict] = []
+    baseline_fitness = None
     bh_idx, bh_fitness = -1, -np.inf
     # improved variant: per-star personal bests (`metaheuristics.py:371-374`)
     best_masks = [m.copy() for m in masks]
     best_fitnesses = np.full(n_stars, -np.inf)
 
     for iteration in range(n_iterations):
-        results = evaluate_all(iteration)
+        bins, _ = plan_star_bins(
+            masks,
+            n_bins,
+            cost_fn=cost_fn if use_load_balancer else None,
+            cost_model=cost_model,
+        )
+        # R34: the all-features baseline rides in the first round.
+        results = evaluate_round(
+            spark, evaluator, masks, bins, n_bins, baseline=iteration == 0
+        )
+        if iteration == 0:
+            history.append(history_row(-1, results.pop(0)))
+            baseline_fitness = history[0]["fitness"]
         fitnesses = np.array([r[1] for r in results])
-        for sid, fit, nf, dt, host in results:
+        for row in results:
             if cost_model is not None:
-                cost_model.observe(nf, dt)  # R30: train the width->time curve
-            history.append(
-                {
-                    "iteration": iteration,
-                    "star_id": sid,
-                    "fitness": fit,
-                    "n_features": nf,
-                    "exec_time": dt,
-                    "hostname": host,
-                }
-            )
+                cost_model.observe(row[2], row[3])  # R30: train the width->time curve
+            history.append(history_row(iteration, row))
         improved = fitnesses > best_fitnesses
         for i in np.nonzero(improved)[0]:
             best_fitnesses[i] = fitnesses[i]
@@ -464,5 +491,5 @@ def run_bbha(
         n_iterations=n_iterations,
         execution_time=_time.perf_counter() - t_start,
         history=history,
-        baseline_fitness=baseline["fitness"],
+        baseline_fitness=baseline_fitness,
     )

@@ -3,8 +3,9 @@
 The reference declares BLIND_SEARCH as its second algorithm
 (`src/emr.py:10-14`) but never implements it (a TODO, SURVEY.md §7.6).
 The semantics are the degenerate BBHA: evaluate N seeded random subsets
-and keep the best — no iterations, so the entire search is ONE grouped
-Arrow pass + one bounded collect (n_subsets rows), the embarrassingly
+and keep the best — no iterations, so the entire search, all-features
+baseline included, is ONE pinned evaluation round (one Spark job, one
+task per bin) + one bounded collect (n_subsets rows), the embarrassingly
 parallel shape Spark likes best. Seeding matches the BBHA star
 initialization (subset i from ``random_state * (i + 1)``,
 `scripts/metaheuristics.py:524-527`), and selection applies the same
@@ -14,7 +15,7 @@ fewer-features tie-break (`:670-681`, R15).
 from __future__ import annotations
 
 import time as _time
-from typing import Callable, Optional
+from typing import Optional
 
 import numpy as np
 import pandas as pd
@@ -24,9 +25,10 @@ from pyspark.sql import SparkSession
 from multiomix_aws_emr_spark.fs.bbha import (
     BBHAResult,
     FitnessFn,
-    _EVAL_SCHEMA,
     _make_evaluator,
-    evaluate_all_features_baseline,
+    _payload_handle,
+    evaluate_round,
+    history_row,
     random_mask,
 )
 from multiomix_aws_emr_spark.fs.fitness import cv_linear_cox_fitness
@@ -53,58 +55,35 @@ def run_blind_search(
     (closure-shipped payload when False; identical results). Blind
     search always uses the sequential partitioner — there is no
     iteration history to train a load balancer on."""
-    from multiomix_aws_emr_spark.fs.bbha import _payload_handle
-
     t_start = _time.perf_counter()
     sc = spark.sparkContext
     n_features = x.shape[1]
     if n_bins is None:
         n_bins = max(1, sc.defaultParallelism)
 
-    bc = _payload_handle(
-        sc,
-        {
-            "values": x.to_numpy(dtype=np.float64),
-            "sample_ids": x.index.to_numpy(),
-            "time": np.asarray(time_col, dtype=np.float64),
-            "event": np.asarray(event_col, dtype=bool),
-        },
-        use_broadcast,
-    )
+    bc = _payload_handle(sc, x, time_col, event_col, use_broadcast)
     evaluator = (
         _make_evaluator(bc, fitness_fn)
         if worst_fitness is None
         else _make_evaluator(bc, fitness_fn, worst_fitness)
     )
-    # R34: the reference computes the all-features baseline before
-    # EITHER algorithm branch (`scripts/core.py:171-179`), so blind
-    # search reports it too.
-    baseline = evaluate_all_features_baseline(spark, evaluator, n_features)
     masks = [
         random_mask(n_features, np.random.RandomState(random_state * (i + 1)))
         for i in range(n_subsets)
     ]
     bins = sequential_bin_assignment(list(range(n_subsets)), n_bins)
-    rows = [(i, bins[i], [int(b) for b in masks[i]]) for i in range(n_subsets)]
-    sdf = spark.createDataFrame(rows, schema="star_id int, bin_id int, mask array<int>")
-    res = sdf.groupBy("bin_id").applyInPandas(evaluator, _EVAL_SCHEMA).collect()
+    # R34: the reference computes the all-features baseline before
+    # EITHER algorithm branch (`scripts/core.py:171-179`), so blind
+    # search reports it too — from the same round.
+    res = evaluate_round(spark, evaluator, masks, bins, n_bins, baseline=True)
+    baseline = history_row(-1, res.pop(0))
 
-    history = [baseline] + [
-        {
-            "iteration": 0,
-            "star_id": r.star_id,
-            "fitness": r.fitness,
-            "n_features": r.n_features,
-            "exec_time": r.exec_time,
-            "hostname": r.hostname,
-        }
-        for r in sorted(res, key=lambda r: r.star_id)
-    ]
-    best = min(res, key=lambda r: (-r.fitness, r.n_features, r.star_id))
-    best_mask = masks[best.star_id]
+    history = [baseline] + [history_row(0, r) for r in res]
+    best = min(res, key=lambda r: (-r[1], r[2], r[0]))
+    best_mask = masks[best[0]]
     return BBHAResult(
         best_mask=best_mask,
-        best_fitness=float(best.fitness),
+        best_fitness=float(best[1]),
         selected_features=[f for f, b in zip(x.columns, best_mask) if b],
         n_iterations=1,
         execution_time=_time.perf_counter() - t_start,

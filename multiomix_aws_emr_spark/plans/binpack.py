@@ -5,9 +5,12 @@ per-star runtime prediction fed into greedy bin-packing, then PINS
 partitions (`scripts/metaheuristics.py:156-166,277-298`, R30/R31/R8/P2).
 Catalyst has no hook for user-supplied per-row cost (AQE balances by data
 size, not UDF runtime), so this stays a planning step OUTSIDE the
-optimizer: compute a ``bin_id`` column, then execute with
-``groupBy('bin_id').applyInPandas`` — hash placement of bins is acceptable
-because bins are pre-balanced by cost.
+optimizer: compute each star's bin here, then run bin b as partition b
+of ``spark.range(0, n_bins, 1, n_bins).mapInPandas``
+(``fs.bbha.evaluate_round``). Bins must not travel through a shuffle: a
+``groupBy('bin_id')`` exchange of a few tiny rows is exactly what AQE
+coalesces into ONE task, which runs every bin serially and voids the
+balance computed here.
 """
 
 from __future__ import annotations

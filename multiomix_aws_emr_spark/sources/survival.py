@@ -13,9 +13,18 @@ Re-founds the reference reader (`scripts/utils.py:38-63`) on Spark:
 - clean_wide reproduces `clean_dataset` (`utils.py:26-35`): drop columns
   containing any NaN (R3), drop rows containing ±Inf (R4), cast everything
   to double (R5) — expressed as two scans + a filter, all pushdown-friendly.
+- read_survival_matrix is the experiment's ingest. The metaheuristic
+  broadcasts the cleaned matrix from the driver (`core.py:167-169`), so
+  the matrix must land there anyway: it collects the long form and the
+  clinical frame once each and pivots, cleans and joins them in pandas
+  with the same rules — one Spark job per input instead of a pivot
+  evaluated three times.
 """
 
 from __future__ import annotations
+
+import numpy as np
+import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -106,3 +115,36 @@ def clean_wide(wide: DataFrame, id_col: str = "sample_id") -> DataFrame:
             finite_row = cond if finite_row is None else (finite_row & cond)
         pruned = pruned.filter(finite_row)
     return pruned
+
+
+def read_survival_matrix(
+    spark: SparkSession, molecules_path: str, clinical_path: str
+) -> tuple[pd.DataFrame, np.ndarray, np.ndarray]:
+    """Molecules + clinical TSVs -> (samples x features float64 frame
+    indexed and sorted by sample_id, time float64, event bool): the
+    reference's load + ``clean_dataset`` + join (`utils.py:26-63`) with
+    one collect per file.
+
+    Same result as ``clean_wide(long_to_wide(...))`` inner-joined with the
+    clinical frame: feature columns in sorted order (Spark's pivot
+    order), columns with any NULL/NaN dropped (R3), samples with any
+    ±Inf dropped (R4), values float64 (R5). A feature id that appears on
+    more than one row raises ``ValueError`` naming it, where the pivot's
+    ``first()`` would keep an arbitrary copy."""
+    long = read_molecules_tsv(spark, molecules_path).toPandas()
+    dup = long.duplicated(["sample_id", "feature"])
+    if dup.any():
+        ids = sorted(long.loc[dup, "feature"].unique())
+        raise ValueError(
+            f"{molecules_path}: duplicate feature id(s) {', '.join(ids)}"
+        )
+    wide = long.pivot(index="sample_id", columns="feature", values="value")
+    wide = wide.sort_index(axis="columns").astype(np.float64)
+    wide = wide.loc[:, wide.notna().all()]  # R3
+    wide = wide[~np.isinf(wide.to_numpy()).any(axis=1)]  # R4
+
+    clinical = read_clinical_tsv(spark, clinical_path).toPandas()
+    joined = wide.join(clinical.set_index("sample_id"), how="inner").sort_index()
+    time_col = joined.pop("time").to_numpy(dtype=np.float64)
+    event_col = joined.pop("event").to_numpy(dtype=bool)
+    return joined, time_col, event_col

@@ -27,6 +27,42 @@ def spark():
     spark.stop()
 
 
+@pytest.fixture
+def spark_jobs(spark):
+    """Run ``fn()`` under a fresh job group; returns ``(fn(), jobs)``
+    where ``jobs`` lists, per Spark job the call ran, the task count of
+    each of its stages (read back from ``statusTracker``)."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def run(fn):
+        group = f"spark-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # job/stage records arrive through the listener bus: wait until
+        # every job of the group reads as finished
+        deadline = time.monotonic() + 30
+        while True:
+            infos = [tracker.getJobInfo(j) for j in sorted(tracker.getJobIdsForGroup(group))]
+            done = all(i is not None and i.status == "SUCCEEDED" for i in infos)
+            if done or time.monotonic() > deadline:
+                break
+            time.sleep(0.05)
+        jobs = [
+            [tracker.getStageInfo(s).numTasks for s in sorted(i.stageIds)]
+            for i in infos
+        ]
+        return out, jobs
+
+    return run
+
+
 @pytest.fixture(scope="session")
 def duck(sf_dir):
     import duckdb

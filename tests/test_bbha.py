@@ -87,6 +87,17 @@ def test_bbha_metrics_and_json(spark, dataset):
     assert doc["features"].count("|") == len(r.selected_features) - 1
 
 
+def test_bbha_one_pinned_job_per_iteration(spark, spark_jobs, dataset):
+    # Each round is one Spark job of one stage with one task per bin: no
+    # shuffle (so nothing for AQE to coalesce into a single serial task)
+    # and no separate job for the all-features baseline.
+    n_bins = spark.sparkContext.defaultParallelism
+    r, jobs = spark_jobs(lambda: _run(spark, dataset))
+    assert len(jobs) == 3
+    assert jobs == [[n_bins]] * 3
+    assert len(r.history) == 6 * 3 + 1
+
+
 def test_bbha_with_cost_model_binpacking(spark, dataset):
     # the reference's load-balancer path (R30/R31): cost ~ subset size
     r = _run(spark, dataset, cost_fn=lambda m: 1.0 + float(m.sum()))
@@ -122,15 +133,20 @@ def test_improved_variant_rejects_bad_coeffs(spark, dataset):
         run_bbha(spark, x, time_col, event_col, variant="improved", coeff_1=9.9)
     with pytest.raises(ValueError, match="coeff_2"):
         run_bbha(spark, x, time_col, event_col, variant="improved", coeff_2=0.9)
+    with pytest.raises(ValueError, match="n_iterations"):
+        run_bbha(spark, x, time_col, event_col, n_iterations=0)
 
 
-def test_blind_search_one_pass(spark, dataset):
+def test_blind_search_one_pass(spark, spark_jobs, dataset):
     from multiomix_aws_emr_spark.fs.blind import run_blind_search
 
     x, time_col, event_col = dataset
-    r1 = run_blind_search(
-        spark, x, time_col, event_col, n_subsets=12, random_state=42
+    r1, jobs = spark_jobs(
+        lambda: run_blind_search(
+            spark, x, time_col, event_col, n_subsets=12, random_state=42, n_bins=4
+        )
     )
+    assert jobs == [[4]]  # baseline + 12 subsets: one job, one task per bin
     r2 = run_blind_search(
         spark, x, time_col, event_col, n_subsets=12, random_state=42
     )

@@ -10,6 +10,7 @@ from multiomix_aws_emr_spark.sources.survival import (
     long_to_wide,
     read_clinical_tsv,
     read_molecules_tsv,
+    read_survival_matrix,
     wide_to_long,
 )
 
@@ -93,3 +94,51 @@ def test_clinical_reader(spark, fixtures):
     assert out["event"].dtype == bool
     assert out["time"].dtype == np.float64
     assert (out.sort_index()["time"] == clin.sort_index()["time"]).all()
+
+
+def test_survival_matrix_matches_reference(spark, fixtures):
+    mol_path, clin_path, mol, clin = fixtures
+    x, time_col, event_col = read_survival_matrix(spark, mol_path, clin_path)
+
+    expected = _pandas_reference_clean(mol).sort_index()
+    expected = expected[sorted(expected.columns)]
+    assert "GENE_0002" not in x.columns  # NaN column dropped
+    assert list(x.index) == ["S00", "S02", "S03", "S04", "S05", "S07"]
+    assert (x.dtypes == np.float64).all()
+    pd.testing.assert_frame_equal(
+        x, expected, check_names=False, check_exact=False, rtol=1e-9
+    )
+    np.testing.assert_array_equal(time_col, clin.loc[x.index, "time"].to_numpy())
+    np.testing.assert_array_equal(
+        event_col, clin.loc[x.index, "event"].to_numpy().astype(bool)
+    )
+    assert time_col.dtype == np.float64 and event_col.dtype == bool
+
+
+def test_survival_matrix_matches_spark_clean(spark, fixtures):
+    # same cells, same column order as the Spark pivot + clean path
+    mol_path, clin_path, _, _ = fixtures
+    x, _, _ = read_survival_matrix(spark, mol_path, clin_path)
+    spark_clean = (
+        clean_wide(long_to_wide(read_molecules_tsv(spark, mol_path)))
+        .toPandas()
+        .set_index("sample_id")
+        .sort_index()
+    )
+    pd.testing.assert_frame_equal(x, spark_clean, check_names=False, check_exact=True)
+
+
+def test_survival_matrix_rejects_duplicate_feature_id(spark, fixtures, tmp_path):
+    _, clin_path, mol, _ = fixtures
+    dup = pd.concat([mol, mol.loc[["GENE_0004"]]])
+    path = str(tmp_path / "dup.tsv")
+    dup.to_csv(path, sep="\t")
+    with pytest.raises(ValueError, match="GENE_0004"):
+        read_survival_matrix(spark, path, clin_path)
+
+
+def test_survival_matrix_ingest_job_bound(spark, spark_jobs, fixtures):
+    # one collect per file plus the CSV readers' header jobs
+    mol_path, clin_path, _, _ = fixtures
+    _, jobs = spark_jobs(lambda: read_survival_matrix(spark, mol_path, clin_path))
+    assert len(jobs) <= 4

@@ -34,6 +34,20 @@ def _norm(v):
     return v
 
 
+def _key(v):
+    """NULL-safe sort key, recursive: python cannot order None against
+    ints (outer-join results carry NULLs, also inside arrays and
+    structs), so every value at every depth sorts NULLS FIRST, as SQL
+    does. Dicts (map cells) order by their sorted items."""
+    if v is None:
+        return (False, ())
+    if isinstance(v, (tuple, list)):
+        return (True, tuple(_key(x) for x in v))
+    if isinstance(v, dict):
+        return (True, tuple(sorted((_key(k), _key(x)) for k, x in v.items())))
+    return (True, v)
+
+
 def main() -> None:
     args = sys.argv[1:]
     sfs = ["sf0.001", "sf0.01"]
@@ -58,11 +72,6 @@ def main() -> None:
             p = os.path.join(sf_dir, f"{t}.parquet")
             if os.path.exists(p):
                 con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
-        # NULL-safe sort key: python cannot order None against ints
-        # (outer-join results carry NULLs), mirror SQL NULLS-FIRST
-        def _key(row):
-            return tuple((v is not None, v) for v in row)
-
         for qid in qids:
             try:
                 s_rows = sorted(
