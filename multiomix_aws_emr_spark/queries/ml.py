@@ -64,12 +64,11 @@ def ml_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector, vector_to_array
 
-    # persist the vectorized frame (r15): the k-means fit (~10 internal
-    # aggregate jobs), the transform, the per-cluster WSS branch and the
-    # TSS branch otherwise EACH replay scan -> cast -> array_to_vector —
-    # four-plus evaluations of the same subtree. CacheManager keys on the
-    # canonicalized plan, so repeated builds of this query in one session
-    # share a single cache entry rather than stacking copies.
+    # persist the vectorized frame (r15) for the fits: the k-means fit
+    # (~10 internal aggregate jobs) and the per-cluster WSS branch
+    # otherwise EACH replay scan -> cast -> array_to_vector. It is
+    # unpersisted once the per-cluster rows are collected; the TSS
+    # branch, the only later reader, scans it once.
     e = (
         scan_parallel(load(spark, sf_dir, "embeddings"))
         .select(
@@ -123,19 +122,23 @@ def ml_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return assigned, percluster
 
-    # Collapse guard (ADVICE r15): materialize the 8-row per-cluster
-    # aggregate the declared grid consumes ANYWAY (persist + collect —
-    # the healthy path computes it exactly once, same as before, just
-    # eagerly), and refit with k-means|| seeding if random init left a
-    # cluster empty. Duplicate-seed collapse is data-dependent and
-    # vanishingly rare, but silently flipping ``nonempty`` to false is
-    # the one failure the contract exists to catch.
+    # Collapse guard (ADVICE r15): collect the 8-row per-cluster
+    # aggregate the declared grid consumes ANYWAY (the healthy path
+    # computes it exactly once, just eagerly), and refit with k-means||
+    # seeding if random init left a cluster empty. Duplicate-seed
+    # collapse is data-dependent and vanishingly rare, but silently
+    # flipping ``nonempty`` to false is the one failure the contract
+    # exists to catch. The grid joins the collected rows back as a local
+    # frame, so nothing stays cached once the fits are done.
     assigned, percluster = _fit_percluster("random")
-    percluster = percluster.persist()
-    if sum(1 for r in percluster.collect() if r.n_vecs > 0) < 8:
-        percluster.unpersist()
+    rows = percluster.collect()
+    if sum(1 for r in rows if r.n_vecs > 0) < 8:
         assigned, percluster = _fit_percluster("k-means||")
-        percluster = percluster.persist()
+        rows = percluster.collect()
+    percluster = spark.createDataFrame(
+        [tuple(r) for r in rows], "prediction int, n_vecs long, wss double"
+    )
+    e.unpersist()
 
     # TSS = sum over dims of n * variance — one narrow 64-key shuffle
     # (posexplode -> per-dim variance), reduced to a single row and

@@ -311,10 +311,10 @@ def join_range_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("p_partkey", "s_suppkey")
 
 
-#: Optimizer confs for the runtime-bloom demonstration, applied SCOPED
-#: around the query's own actions (registry ``extra_confs`` — restored the
-#: moment the action returns). Each maps a fixture-scale stand-in to the
-#: 100 TB reality it reproduces:
+#: Optimizer confs for the runtime-bloom demonstration (registry
+#: ``extra_confs``: set when the query is built, put back by the next
+#: declared build). Each maps a fixture-scale stand-in to the 100 TB
+#: reality it reproduces:
 _RUNTIME_BLOOM_CONFS = {
     # At 100 TB the ~1/5-selective orders slice is far beyond any broadcast
     # threshold, so the real plan is a shuffle join; fixtures would pick
@@ -371,12 +371,13 @@ def join_runtime_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``might_contain(bloom_filter_agg(xxhash64(o_orderkey)))`` built from
     the dim slice, so ~4/5 of lineitem is dropped BEFORE its shuffle — the
     exchange that dominates a 100 TB fact join. The plan is declarative
-    DataFrame code; only the injection-gating confs are set (scoped, via
-    the registry's ``extra_confs``), each annotated with its true-scale
-    meaning above. Injection is plan-asserted in
-    tests/test_runtime_bloom.py; BASELINE.md records the complementary
-    negative result (the incremental-dedup shape does NOT qualify — its
-    creation side lacks a recognizably selective predicate)."""
+    DataFrame code; only the injection-gating confs are set (at build
+    time, via the registry's ``extra_confs``; they hold until the next
+    declared build), each annotated with its true-scale meaning above.
+    Injection is plan-asserted in tests/test_runtime_bloom.py; BASELINE.md
+    records the complementary negative result (the incremental-dedup
+    shape does NOT qualify — its creation side lacks a recognizably
+    selective predicate)."""
     li = load(spark, sf_dir, "lineitem")
     o = load(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority") == "1-URGENT"

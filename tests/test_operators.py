@@ -452,6 +452,23 @@ def test_mlkmeans_invariants(spark, sf_dir):
     assert rows == again  # seeded fit on fixed data is deterministic
 
 
+def test_mlkmeans_leaves_nothing_cached(spark, sf_dir, tmp_path):
+    """The k-means query persists its vectors only for the fits: once the
+    grid is built and run, the session's CacheManager holds no entry of
+    its own. The input is a private copy, so no earlier build of the
+    query can already hold a matching cache entry."""
+    import shutil
+
+    from multiomix_aws_emr_spark.queries import QUERIES
+
+    shutil.copy(f"{sf_dir}/embeddings.parquet", tmp_path / "embeddings.parquet")
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    before = cm.numCachedEntries()
+    rows = QUERIES["ml_kmeans_embeddings"](spark, str(tmp_path)).collect()
+    assert len(rows) == 8
+    assert cm.numCachedEntries() == before
+
+
 def test_temporal_join_matches_pandas_reference(spark):
     """Randomized differential test: the union+window temporal join must
     agree with pandas merge_asof (backward, inclusive) on every key."""

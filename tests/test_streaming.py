@@ -373,25 +373,26 @@ def test_directory_layout_matches_single_file(spark, sf_dir, tmp_path):
     )
 
 
-def test_static_and_stream_state_sizing(spark, sf_dir, tmp_path):
+def test_static_and_stream_state_sizing(spark, sf_dir, tmp_path, monkeypatch):
     """Single-file layout derives state instances from SOURCE BYTES (one
     per ~16 MB of parquet, floor 4, cap cores — r16); a 4-part directory
     sizes state to the part count floored at cores/4 and capped at the
     core count."""
-    import math
     import os
 
-    from multiomix_aws_emr_spark.streaming.util import (
-        _BATCH_TARGET_BYTES,
-        static_and_stream,
-    )
+    from multiomix_aws_emr_spark.streaming.util import static_and_stream
 
+    # the fixture events file is at most a few MB: the floor of 4 holds
     _, _, n_single = static_and_stream(spark, sf_dir, "events.parquet")
-    cores0 = spark.sparkContext.defaultParallelism
-    fbytes = os.path.getsize(os.path.join(sf_dir, "events.parquet"))
-    assert n_single == max(
-        4, min(math.ceil(fbytes / (_BATCH_TARGET_BYTES // 4)), cores0)
-    )
+    assert n_single == 4
+    # a several-GB single file wants hundreds of instances; the core
+    # count caps it
+    monkeypatch.setattr(os.path, "getsize", lambda _p: 6 << 30)
+    _, _, n_big = static_and_stream(spark, sf_dir, "events.parquet")
+    monkeypatch.undo()
+    cores = spark.sparkContext.defaultParallelism
+    assert cores > 4
+    assert n_big == cores
 
     dir_sf = tmp_path / "sfdir2"
     dir_sf.mkdir()
@@ -402,8 +403,7 @@ def test_static_and_stream_state_sizing(spark, sf_dir, tmp_path):
         .write.parquet(str(dir_sf / "events.parquet"))
     )
     _, _, n_dir = static_and_stream(spark, str(dir_sf), "events.parquet")
-    cores = spark.sparkContext.defaultParallelism
-    assert n_dir == max(cores // 4, min(4, cores))
+    assert n_dir == 4  # the part count, inside [cores // 4, cores]
 
 
 def test_prewarm_streaming_runtime(spark, sf_dir):

@@ -78,6 +78,7 @@ def main() -> int:
     from tools.scale_probe import synthesize
 
     from multiomix_aws_emr_spark.queries import QUERIES
+    from multiomix_aws_emr_spark.queries.relational import _RUNTIME_BLOOM_CONFS
     from multiomix_aws_emr_spark.session import build_session
 
     spark = build_session(
@@ -93,12 +94,27 @@ def main() -> int:
         args.replicas,
     )
 
+    # The sketch-size keys are in no query's extra_confs, so no declared
+    # build puts them back: every variant sets them.
+    stock = {key: spark.conf.get(key) for key in SIZED_CONFS}
+    variant_confs = {
+        "on": stock,
+        "sized": SIZED_CONFS,
+        "off": {**stock, **OFF_CONFS},
+    }
+
     def run(variant: str) -> dict:
+        # the build sets the query's own confs; a variant overrides them
+        # after the build and before the action
         df = QUERIES[QID](spark, big_dir)
-        if variant == "off":
-            df._maes_extra_confs = dict(OFF_CONFS)
-        elif variant == "sized":
-            df._maes_extra_confs = {**df._maes_extra_confs, **SIZED_CONFS}
+        confs = variant_confs[variant]
+        for key, value in confs.items():
+            spark.conf.set(key, value)
+        # a variant whose confs are not live would measure another
+        # variant's plan
+        want = {**_RUNTIME_BLOOM_CONFS, **confs}
+        live = {key: spark.conf.get(key) for key in want}
+        assert live == want, f"{variant} confs not live at save: {live}"
         seen = {s["stageId"] for s in _stages(spark)}
         t0 = time.perf_counter()
         df.write.mode("overwrite").format("noop").save()

@@ -6,7 +6,7 @@ text_unigram_rarity) run on the 1000x documents synth
 (tools/scale_probe.py --tier documents --replicas 1000):
 
   hinted   — hands-free: the registry hint resolves the count
-  manual N — SPARK_GRAFT_SIZING_HINTS=0 + explicit conf, N in the sweep
+  manual N — build the query, then set the conf to N, then run it
 
 and report each wall plus the hinted pick's ratio to the sweep's best.
 VERDICT r10 task 3's bar: hinted within ~10% of hand-tuned. Each query is
@@ -43,6 +43,7 @@ def main() -> int:
     ap.add_argument("--big-dir", default="/tmp/scale_probe/documents_1000x")
     args = ap.parse_args()
 
+    from multiomix_aws_emr_spark.queries import QUERIES
     from multiomix_aws_emr_spark.queries.registry import SIZING_HINTS, _apply_sizing
     from multiomix_aws_emr_spark.session import build_session
 
@@ -52,25 +53,17 @@ def main() -> int:
     baseline = spark.conf.get(conf)
 
     for qid in QIDS:
-        os.environ.pop("SPARK_GRAFT_SIZING_HINTS", None)
         resolved = _apply_sizing(spark, SIZING_HINTS[qid], args.big_dir)
         spark.conf.set(conf, baseline)
         _run(spark, qid, args.big_dir)  # warm
         hinted = _run(spark, qid, args.big_dir)
 
-        os.environ["SPARK_GRAFT_SIZING_HINTS"] = "0"
         manual: dict[int, float] = {}
         for n in SWEEP:
-            # With hints off the registry binds the frame to the BASELINE
-            # and the bound write sink re-applies that binding at save()
-            # time — a bare conf.set here is silently overridden and every
-            # "manual N" run would execute at the baseline (ADVICE r11,
-            # medium). RETARGET THE BINDING itself to the sweep point so
-            # the action-time re-apply pins exactly N.
-            from multiomix_aws_emr_spark.queries import QUERIES
-
+            # a declared query's build sets its own count; the sweep point
+            # must be set after the build and before the action
             df = QUERIES[qid](spark, args.big_dir)
-            df._maes_exec_conf = (spark, str(n))
+            spark.conf.set(conf, str(n))
             t0 = time.perf_counter()
             df.write.mode("overwrite").format("noop").save()
             executed_at = spark.conf.get(conf)
@@ -79,7 +72,6 @@ def main() -> int:
                 f"executed at {executed_at}"
             )
             manual[n] = round(time.perf_counter() - t0, 2)
-        os.environ.pop("SPARK_GRAFT_SIZING_HINTS", None)
         spark.conf.set(conf, baseline)
 
         best_n, best_t = min(manual.items(), key=lambda kv: kv[1])
